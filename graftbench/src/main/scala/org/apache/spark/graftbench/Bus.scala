@@ -1,0 +1,10 @@
+package org.apache.spark.graftbench
+
+import org.apache.spark.SparkContext
+
+/** Access to the listener bus, whose drain call is package-private:
+  * the traced run waits for every queued event before it reads its
+  * spans. */
+object Bus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
+}
